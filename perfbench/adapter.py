@@ -1,9 +1,11 @@
-"""Every call the benchmark makes into ``metasra_pipeline_spark``.
+"""Every call the benchmark makes into ``metasra_pipeline_spark``, the
+driver queries of ``__spark_entry__`` and their DuckDB oracles.
 
-The workloads, their output checks and the traced variants of their
-passes live here, so an API change in the package touches this file
-only.  Tracing wraps the package's public functions and the
-``Snapshotter.cut`` seam from the outside; no package code changes.
+The workloads, their output checks, the traced variants of their
+passes and the traced steps after them live here, so an API change in
+the package touches this file only.  Tracing wraps the package's public
+functions and the ``Snapshotter.cut`` seam from the outside; no package
+code changes.
 """
 
 from __future__ import annotations
@@ -13,19 +15,39 @@ import json
 import os
 from contextlib import ExitStack, contextmanager
 
+import duckdb
+import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+import __spark_entry__ as entry
 from metasra_pipeline_spark.datagen import synth_documents
+from metasra_pipeline_spark.er import incremental as I
 from metasra_pipeline_spark.er import resolution as R
+from metasra_pipeline_spark.icelite import IceLiteTable
 from metasra_pipeline_spark.operators import consolidate as C
 from metasra_pipeline_spark.ops import LocalSnapshotter
 from metasra_pipeline_spark.plans.pipeline import run_mapping_pipeline
 from metasra_pipeline_spark.refdata import load_refdata
 from metasra_pipeline_spark.session import get_spark
+from scripts.check_contract import norm
 
 ER_THRESHOLD = 0.65
+# the landing traced after the batch ER pass: a base committed through
+# resolve_entities_checkpointed, then one delta landed onto it
+LAND_BASE, LAND_DELTA = 2_000, 500
+# similarity queries traced after the batch ER pass, over tables made
+# from the seed (documents, events, embeddings; sf0.01-like sizes)
+SIM_QUERIES = {"functions.q15": "q15_lsh_pairs",
+               "functions.q27": "q27_graph_components",
+               "functions.q38": "q38_cosine_neardup"}
+SIM_DOCS, SIM_EVENTS, SIM_USERS, SIM_VECS, SIM_DIM = 500, 5_000, 150, 500, 64
+SIM_WORDS = ("key agg row scan slow fast table value part hash merge batch "
+             "spark a the line sort window order data column join small "
+             "customer query big stream group filter vector").split() \
+    + [f"w{i:03d}" for i in range(400)]
+SIM_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 # Which layer's work a named mapping-pipeline cut materializes: the
 # lazy subtree since the previous cuts was built by that module.
@@ -40,7 +62,8 @@ CUT_LAYERS = {
     "closure2": "consolidate", "closure4": "consolidate",
 }
 MAP_LAYERS = ["ingest", "stages", "precedence", "inference", "consolidate"]
-ER_LAYERS = ["er.profiles", "er.reps", "er.score", "er.cc", "er.assign"]
+ER_LAYERS = ["er.profiles", "er.reps", "er.score", "er.cc", "er.assign",
+             "er.incremental", "icelite", *SIM_QUERIES]
 
 
 def start_session(cores: int):
@@ -106,9 +129,8 @@ class MapWorkload:
 
     layers = MAP_LAYERS
 
-    def __init__(self, n_docs: int, n_warm: int):
+    def __init__(self, n_docs: int):
         self.n_docs = n_docs
-        self.n_warm = n_warm
 
     def setup(self, spark) -> None:
         self.ref = load_refdata(spark)
@@ -116,15 +138,7 @@ class MapWorkload:
     def make_inputs(self, spark, seed: int) -> None:
         self.docs = (synth_documents(spark, self.n_docs, seed=seed)
                      .select("doc_id", "spans").localCheckpoint(eager=True))
-        self.warm_docs = (synth_documents(spark, self.n_warm, seed=seed)
-                          .select("doc_id", "spans")
-                          .localCheckpoint(eager=True))
         self.doc_ids = {r[0] for r in self.docs.select("doc_id").collect()}
-
-    def warm_up(self, spark) -> None:
-        res = run_mapping_pipeline(spark, self.warm_docs, self.ref)
-        res.mapped_terms.collect()
-        res.real_values.collect()
 
     def run_pass(self, spark, rec=None):
         if rec is None:
@@ -161,6 +175,9 @@ class MapWorkload:
     def counts(self, rec, out) -> dict:
         return {}
 
+    def trace_steps(self, spark, rec, work: str) -> list:
+        return []
+
 
 # -------------------------------------------------------------- er
 class ErWorkload:
@@ -169,29 +186,21 @@ class ErWorkload:
 
     layers = ER_LAYERS
 
-    def __init__(self, n_docs: int, n_warm: int, dup_factor: int = 5):
+    def __init__(self, n_docs: int, dup_factor: int = 5):
         self.n_docs = n_docs
-        self.n_warm = n_warm
         self.dup_factor = dup_factor
 
     def setup(self, spark) -> None:
         pass
 
     def make_inputs(self, spark, seed: int) -> None:
+        self.seed = seed
         gen = synth_documents(spark, self.n_docs, seed=seed,
                               dup_factor=self.dup_factor) \
             .localCheckpoint(eager=True)
         self.docs = gen.select("doc_id", "spans").localCheckpoint(eager=True)
         self.truth = gen.select("doc_id", "entity_id")
         self.doc_ids = {r[0] for r in self.truth.select("doc_id").collect()}
-        self.warm_docs = (synth_documents(spark, self.n_warm, seed=seed,
-                                          dup_factor=self.dup_factor)
-                          .select("doc_id", "spans")
-                          .localCheckpoint(eager=True))
-
-    def warm_up(self, spark) -> None:
-        R.resolve_entities(spark, self.warm_docs, threshold=ER_THRESHOLD) \
-            ["clusters"].collect()
 
     def run_pass(self, spark, rec=None):
         if rec is None:
@@ -259,10 +268,7 @@ class ErWorkload:
             raise AssertionError("a document has more than one label")
         if set(ids) != self.doc_ids:
             raise AssertionError("clusters do not label every input doc")
-        groups: dict[str, list[str]] = {}
-        for r in clusters:
-            groups.setdefault(r["cluster_id"], []).append(r["doc_id"])
-        return _digest(sorted(g) for g in groups.values())
+        return _partition(clusters)
 
     def final_check(self, spark, last_out) -> dict:
         res, _clusters = last_out
@@ -290,10 +296,162 @@ class ErWorkload:
         return out
 
 
-# The warm-up pass runs the same plans over a small input, so the JVM's
-# first-run cost (JIT, code generation, worker imports) is paid before
-# the timed passes at a fraction of a full pass's wall.
+    # ---------------------------------------- steps after the traced pass
+    def trace_steps(self, spark, rec, work: str) -> list:
+        """One landing, then each similarity query: callables that run
+        their part traced, check its output and return its counts."""
+        steps = [lambda: self._landing(spark, rec, os.path.join(work, "land"))]
+        sim_dir = os.path.join(work, "sim")
+        write_sim_tables(sim_dir, self.seed)
+        for layer, query in SIM_QUERIES.items():
+            steps.append(lambda layer=layer, query=query: _sim_query(
+                spark, rec, sim_dir, layer, query))
+        return steps
+
+    def _landing(self, spark, rec, workdir: str) -> dict:
+        """Commit a base with ``resolve_entities_checkpointed`` (untraced
+        set-up), land one delta through
+        ``incremental_resolve_checkpointed`` traced, then check that its
+        labels partition base ∪ delta exactly as a batch
+        ``resolve_entities`` does (untimed)."""
+        gen = synth_documents(spark, LAND_BASE + LAND_DELTA, seed=self.seed,
+                              dup_factor=self.dup_factor) \
+            .select("doc_id", "spans").localCheckpoint(eager=True)
+        ids = sorted(r[0] for r in gen.select("doc_id").collect())
+        base = gen.where(F.col("doc_id").isin(ids[:LAND_BASE])) \
+            .localCheckpoint(eager=True)
+        delta = gen.where(F.col("doc_id").isin(ids[LAND_BASE:])) \
+            .localCheckpoint(eager=True)
+        R.resolve_entities_checkpointed(spark, base, workdir,
+                                        threshold=ER_THRESHOLD)
+
+        def wrap_icelite(kind):
+            def factory(orig):
+                def traced(table, *a, **kw):
+                    before = _tree_bytes(table.path)
+                    with rec.span("icelite", f"{kind}:"
+                                  f"{os.path.basename(table.path)}"):
+                        out = orig(table, *a, **kw)
+                    if kind == "commit":
+                        rec.add("icelite.commits", 1)
+                        rec.add("icelite.bytes_written",
+                                _tree_bytes(table.path) - before)
+                    return out
+                return traced
+            return factory
+
+        with ExitStack() as stack:
+            for kind in ("commit", "read"):
+                stack.enter_context(
+                    _patched(IceLiteTable, kind, wrap_icelite(kind)))
+            with rec.span("er.incremental",
+                          "call:incremental_resolve_checkpointed"):
+                res = I.incremental_resolve_checkpointed(
+                    spark, workdir, delta, threshold=ER_THRESHOLD)
+            with rec.span("er.incremental", "sink:clusters"):
+                landed = res["clusters"].collect()
+
+        batch = R.resolve_entities(spark, gen, threshold=ER_THRESHOLD)
+        ids_landed = [r["doc_id"] for r in landed]
+        if len(ids_landed) != len(set(ids_landed)) \
+                or set(ids_landed) != set(ids):
+            raise AssertionError("landing does not label every doc once")
+        if _partition(landed) != _partition(batch["clusters"].collect()):
+            raise AssertionError(
+                "landing labels differ from a batch run over base ∪ delta")
+        new_reps = R.representative_profiles(res["new_profiles"])
+        base_reps = R.representative_profiles(R.doc_profiles(base))
+        n_attach = new_reps.join(base_reps.select("profile"),
+                                 on="profile").count()
+        return {"er.incremental.attach_ratio":
+                n_attach / max(new_reps.count(), 1),
+                "icelite.commits": rec.counts.get("icelite.commits", 0),
+                "icelite.bytes_written":
+                rec.counts.get("icelite.bytes_written", 0)}
+
+
+def _partition(rows) -> str:
+    """Digest of the label partition: which docs share a label."""
+    groups: dict[str, list[str]] = {}
+    for r in rows:
+        groups.setdefault(r["cluster_id"], []).append(r["doc_id"])
+    return _digest(sorted(g) for g in groups.values())
+
+
+def _tree_bytes(path: str) -> int:
+    return sum(os.path.getsize(os.path.join(d, f))
+               for d, _, files in os.walk(path) for f in files)
+
+
+# ------------------------------------------------------- similarity
+def write_sim_tables(sim_dir: str, seed: int) -> None:
+    """``documents``, ``events`` and ``embeddings`` parquet tables with
+    the sf tables' schemas, made from ``seed``.  A tenth of the
+    documents and a fifth of the vectors are perturbed copies of
+    others, so the LSH and cosine near-duplicate queries find pairs."""
+    rng = np.random.default_rng(seed)
+    os.makedirs(sim_dir, exist_ok=True)
+    texts = [" ".join(rng.choice(SIM_WORDS, rng.integers(20, 80)))
+             for _ in range(SIM_DOCS)]
+    for i in rng.choice(SIM_DOCS, SIM_DOCS // 10, replace=False):
+        words = texts[rng.integers(SIM_DOCS)].split()
+        words[rng.integers(len(words))] = str(rng.choice(SIM_WORDS))
+        texts[i] = " ".join(words)
+    pd.DataFrame({
+        "doc_id": np.arange(SIM_DOCS, dtype=np.int64), "text": texts,
+        "lang": rng.choice(["de", "en", "es", "fr", "zh"], SIM_DOCS),
+        "source": [f"src{i % 20}" for i in range(SIM_DOCS)],
+        "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
+    }).to_parquet(os.path.join(sim_dir, "documents.parquet"), index=False)
+
+    gaps = rng.exponential(30.0, SIM_EVENTS)
+    pd.DataFrame({
+        "event_id": np.arange(SIM_EVENTS, dtype=np.int64),
+        "ts": pd.Timestamp("2024-01-01")
+        + pd.to_timedelta(np.cumsum(gaps), unit="s").round("us"),
+        "user_id": rng.integers(0, SIM_USERS, SIM_EVENTS).astype(np.int64),
+        "event_type": rng.choice(SIM_EVENT_TYPES, SIM_EVENTS),
+        "value": np.round(rng.uniform(0, 20, SIM_EVENTS), 2),
+        "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, SIM_EVENTS)],
+    }).to_parquet(os.path.join(sim_dir, "events.parquet"), index=False,
+                  coerce_timestamps="us")
+
+    vecs = rng.normal(0, 1, (SIM_VECS, SIM_DIM))
+    for i in rng.choice(SIM_VECS, SIM_VECS // 5, replace=False):
+        vecs[i] = vecs[rng.integers(SIM_VECS)] + rng.normal(0, 0.5, SIM_DIM)
+    vecs = (vecs / np.linalg.norm(vecs, axis=1, keepdims=True)) \
+        .astype(np.float32)
+    pd.DataFrame({
+        "vec_id": np.arange(SIM_VECS, dtype=np.int64),
+        "embedding": list(vecs),
+        "label": rng.integers(0, 10, SIM_VECS).astype(np.int32),
+    }).to_parquet(os.path.join(sim_dir, "embeddings.parquet"), index=False)
+
+
+def _sim_query(spark, rec, sim_dir: str, layer: str, query: str) -> dict:
+    """Run one ``__spark_entry__`` query traced, collect it, and check
+    it hash-exact against its DuckDB oracle over the same tables."""
+    with rec.span(layer, f"query:{query}"):
+        got = entry.queries()[query](spark, sim_dir).toPandas()
+    con = duckdb.connect()
+    try:
+        for t in ("documents", "events", "embeddings"):
+            con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
+                    f"'{os.path.join(sim_dir, t + '.parquet')}'")
+        want = con.sql(entry.oracle_sql()[query]).df()
+    finally:
+        con.close()
+    a, b = norm(got), norm(want)
+    if list(a.columns) != list(b.columns) or len(a) != len(b) \
+            or not a.equals(b):
+        raise AssertionError(f"{query}: {len(a)} rows differ from the "
+                             f"oracle's {len(b)}")
+    if a.empty:
+        raise AssertionError(f"{query}: no rows")
+    return {}
+
+
 WORKLOADS = {
-    "map_50": lambda: MapWorkload(50, n_warm=10),
-    "er_2k": lambda: ErWorkload(2_000, n_warm=200),
+    "map_1k": lambda: MapWorkload(1_000),
+    "er_50k": lambda: ErWorkload(50_000),
 }

@@ -1,24 +1,26 @@
 """The repository's benchmark: one workload per invocation.
 
-    python3 perfbench/run.py --workload map_50 --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload map_1k --seed 1 --seconds 5 --trace 0
 
-Run from the repository root.  The run sets up a Spark session three
-times (``setup_s`` is the median; only the first launches the JVM) and
-generates the workload's inputs from ``--seed``.  One warm-up pass over
-a small input then pays the JVM's first-run cost; its wall goes to the
-run record only, because on a shared host it spreads too widely to be a
-metric.  Timed
-passes follow until ``--seconds`` seconds have passed (at least one),
-and ``docs_per_s`` is the workload's documents over their median wall.
-Every pass's output is checked and must match the stored digest for the
-seed, or the first pass's; a pass that raises or differs counts in
-``failed``.  With ``--trace 1`` the run sets up once and adds one traced
-pass after the timed ones, printing the per-layer metrics instead of
-the end-to-end ones; spans go to ``perfbench/out/``.
+Run from the repository root.  The run sets up once from a fresh
+process: JVM launch, Spark session, Python-worker warm-up and, for the
+mapping workload, the reference data (``setup_s``).  It then generates
+the workload's inputs from ``--seed`` and makes one timed pass over
+them, as one spark-submit run would: ``docs_per_s`` is the workload's
+documents over that pass's wall.  Further passes run only while
+``--seconds`` has not passed since the first began, and only re-check
+its output.  Every pass's output is checked and must match the digest
+stored for the seed in ``golden.json``, or else the first pass's; a
+pass that raises or differs counts in ``failed``.  With ``--trace 1``
+the one pass is traced and is followed by the workload's traced steps
+(for ``er_50k``: one landing and three similarity queries); the run
+prints the per-layer metrics instead of the end-to-end ones, and
+writes its spans to ``perfbench/out/``.
 
 The last stdout line is the result JSON
 ``{"correct", "attempted", "failed", "metrics"}``; the line before it
-is the run record (pass walls, host steal jiffies and load average).
+is the run record (set-up and pass walls, output digest, host steal
+jiffies and load average).
 Metric names and units are read from ``BENCHMARK.json``.  The exit
 code is 0 only when every check passed.
 """
@@ -30,15 +32,14 @@ import json
 import os
 import shutil
 import signal
-import statistics
 import subprocess
 import sys
+import tempfile
 import time
 import traceback
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-SETUPS = 3
 # package knobs that would change what is measured; the benchmark runs
 # the defaults whatever the calling shell exports
 PACKAGE_KNOBS = [
@@ -55,8 +56,7 @@ def host_env(work: str) -> dict:
 
     Task slots are one fewer than the CPUs, leaving one for the driver
     JVM and the Python driver, which the job-latency-bound passes lean
-    on.  The driver heap is a quarter of RAM, at most 2g, fixed and
-    touched at start, so ``peak_rss_mb`` does not follow GC timing."""
+    on.  The driver heap may grow to a quarter of RAM, at most 2g."""
     from spans import mem_total_bytes
     cores = max(1, len(os.sched_getaffinity(0)) - 1)
     mem_gb = max(1, min(2, mem_total_bytes() // (4 << 30)))
@@ -71,8 +71,7 @@ def host_env(work: str) -> dict:
         "TMPDIR": tmp,
         "PYSPARK_PYTHON": sys.executable,
         "PYSPARK_SUBMIT_ARGS": (f"--driver-java-options "
-                                f"'-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
-                                f" -Xms{mem_gb}g -XX:+AlwaysPreTouch'"
+                                f"'-Djava.io.tmpdir={tmp} -XX:-UsePerfData'"
                                 f" --conf spark.ui.showConsoleProgress=false"
                                 f" pyspark-shell"),
     })
@@ -109,10 +108,12 @@ def stop_spark(spark) -> None:
             pass
 
 
-def layer_metrics(wl, rec, t0: float, t1: float, cores: int,
+def layer_metrics(wl, rec, t0: float, t1: float, t2: float, cores: int,
                   adapter) -> dict:
-    walls, gap = rec.layer_walls(t0, t1)
-    jobs, total = rec.job_metrics(t0, t1)
+    """Per-layer metrics of the traced pass [t0, t1] and the traced
+    steps after it, up to t2."""
+    walls, gap = rec.layer_walls(t0, t2)
+    jobs, total = rec.job_metrics(t0, t2)
     out: dict[str, float] = {}
 
     def put(layer, wall, agg):
@@ -130,12 +131,13 @@ def layer_metrics(wl, rec, t0: float, t1: float, cores: int,
     out["pipeline.driver_gap_s"] = gap if is_map else 0.0
     out["pipeline.unattributed_jobs"] = total["unattributed"] if is_map else 0
     for key in ("er.reps.dedup_ratio", "er.score.accept_ratio",
-                "er.cc.rounds"):
+                "er.cc.rounds", "er.incremental.attach_ratio",
+                "icelite.commits", "icelite.bytes_written"):
         out[key] = 0.0
     return out
 
 
-def bench(args, host: dict, spec: dict) -> tuple[dict, dict]:
+def bench(args, host: dict, spec: dict, work: str) -> tuple[dict, dict]:
     import adapter
     from spans import PeakRss, Recorder, loadavg1, steal_jiffies
 
@@ -147,20 +149,19 @@ def bench(args, host: dict, spec: dict) -> tuple[dict, dict]:
     attempted = failed = 0
     spark = None
     try:
-        setups = []
-        for _ in range(1 if args.trace else SETUPS):
-            if spark is not None:
-                spark.stop()
-            t0 = time.perf_counter()
-            spark = adapter.start_session(host["cores"])
-            adapter.warm_workers(spark)
-            wl.setup(spark)
-            setups.append(time.perf_counter() - t0)
+        # from here to a ready session, the JVM launch included: what
+        # every fresh driver process pays
+        t0 = time.perf_counter()
+        spark = adapter.start_session(host["cores"])
+        adapter.warm_workers(spark)
+        wl.setup(spark)
+        setup_s = time.perf_counter() - t0
         wl.make_inputs(spark, args.seed)
         # every pass must reproduce the stored digest for this seed, or
         # else the first pass's
         expect = adapter.golden_digest(args.workload, args.seed)
         record["golden_checked"] = expect is not None
+        rec = Recorder(spark, host["cores"]) if args.trace else None
 
         def one_pass(rec=None):
             nonlocal attempted, failed, expect
@@ -179,58 +180,46 @@ def bench(args, host: dict, spec: dict) -> tuple[dict, dict]:
                 return None
             return t0, t1, out
 
-        timed, last = [], None
+        # The first pass is the measured one: what one spark-submit run
+        # pays, JIT and code generation included.  Passes that still
+        # start within --seconds are warm and only re-check the output.
         with PeakRss() as rss:
-            attempted += 1
-            t0 = time.time()
+            first = one_pass(rec)
+            while (first is not None and rec is None
+                   and time.time() - first[0] < args.seconds):
+                one_pass()
+        record.update(setup_s=setup_s, digest=expect, peak_rss_bytes=rss.peak)
+        if first is not None:
+            t0, t1, out = first
+            record["pass_s"] = t1 - t0
             try:
-                wl.warm_up(spark)
-                record["warmup_s"] = time.time() - t0
-            except Exception:
-                traceback.print_exc()
-                failed += 1
-            start, tries = time.time(), 0
-            while tries == 0 or time.time() - start < args.seconds:
-                tries += 1
-                res = one_pass()
-                if res is not None:
-                    timed.append(res[1] - res[0])
-                    last = res[2]
-        record.update(setups_s=setups, timed_s=timed, digest=expect,
-                      peak_rss_bytes=rss.peak)
-        if last is not None:
-            try:
-                record["final_check"] = wl.final_check(spark, last)
+                record["final_check"] = wl.final_check(spark, out)
             except AssertionError:
                 traceback.print_exc()
                 failed += 1
-        if timed:
-            metrics["setup_s"] = statistics.median(setups)
-            metrics["docs_per_s"] = wl.n_docs / statistics.median(timed)
-            metrics["peak_rss_mb"] = rss.peak / 2**20
-
-        if args.trace and timed:
-            rec = Recorder(spark, host["cores"])
-            res = one_pass(rec)
-            if res is not None:
-                t0, t1, out = res
-                metrics = layer_metrics(wl, rec, t0, t1, host["cores"],
-                                        adapter)
-                metrics.update(wl.counts(rec, out))
-                metrics["trace_overhead_s"] = (
-                    (t1 - t0) - statistics.median(timed))
-                if wl.layers is adapter.MAP_LAYERS:
-                    parts = (sum(metrics[f"{x}.wall_s"] for x in wl.layers)
-                             + metrics["pipeline.driver_gap_s"])
-                    if abs(parts - (t1 - t0)) > 0.05 * (t1 - t0):
-                        print("layer walls do not add up to the pass wall",
-                              file=sys.stderr)
-                        failed += 1
-                rec.write_jsonl(
-                    os.path.join(HERE, "out", f"trace-{args.workload}"
-                                 f"-seed{args.seed}.jsonl"),
-                    {"workload": args.workload, "seed": args.seed,
-                     "pass_start": t0, "pass_end": t1, "metrics": metrics})
+            metrics = {"setup_s": setup_s,
+                       "docs_per_s": wl.n_docs / (t1 - t0),
+                       "peak_rss_mb": rss.peak / 2**20}
+        if first is not None and rec is not None:
+            counts = wl.counts(rec, out)
+            for step in wl.trace_steps(spark, rec, work):
+                attempted += 1
+                try:
+                    counts.update(step())
+                except Exception:
+                    traceback.print_exc()
+                    failed += 1
+            t2 = time.time()
+            metrics = layer_metrics(wl, rec, t0, t1, t2, host["cores"],
+                                    adapter)
+            metrics.update(counts)
+            metrics["trace_overhead_s"] = rec.overhead_s
+            rec.write_jsonl(
+                os.path.join(HERE, "out", f"trace-{args.workload}"
+                             f"-seed{args.seed}.jsonl"),
+                {"workload": args.workload, "seed": args.seed,
+                 "pass_start": t0, "pass_end": t1, "steps_end": t2,
+                 "metrics": metrics})
     finally:
         if spark is not None:
             stop_spark(spark)
@@ -271,10 +260,12 @@ def main() -> int:
         return 2
 
     sys.path.insert(0, ROOT)
-    work = os.path.join(HERE, ".work", f"run-{os.getpid()}")
+    # a fresh directory per run, even if an earlier run left its own
+    os.makedirs(os.path.join(HERE, ".work"), exist_ok=True)
+    work = tempfile.mkdtemp(prefix="run-", dir=os.path.join(HERE, ".work"))
     try:
         host = host_env(work)
-        result, record = bench(args, host, spec)
+        result, record = bench(args, host, spec, work)
     finally:
         shutil.rmtree(work, ignore_errors=True)
     print(json.dumps({"run": record}))

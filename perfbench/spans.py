@@ -34,11 +34,14 @@ class Recorder:
         self.prefix = f"perfbench-{os.getpid()}-{id(self)}:"
         self.spans: list[dict] = []
         self.counts: dict[str, float] = {}
+        # wall spent in span bookkeeping: what tracing adds to a pass
+        self.overhead_s = 0.0
         self._lock = threading.Lock()
         self._local = threading.local()
 
     @contextmanager
     def span(self, layer: str, name: str):
+        b0 = time.perf_counter()
         sc = self.sc
         prev_group = sc.getLocalProperty(_GROUP)
         prev_desc = sc.getLocalProperty(_DESC)
@@ -50,17 +53,21 @@ class Recorder:
         sc.setLocalProperty(_DESC, name)
         rec = {"layer": layer, "name": name,
                "parent": parent["name"] if parent else None,
-               "thread": threading.get_ident(), "start": time.time()}
+               "thread": threading.get_ident(), "depth": len(stack),
+               "start": time.time()}
         stack.append(rec)
+        b1 = time.perf_counter()
         try:
             yield rec
         finally:
             rec["end"] = time.time()
+            e0 = time.perf_counter()
             stack.pop()
             sc.setLocalProperty(_GROUP, prev_group)
             sc.setLocalProperty(_DESC, prev_desc)
             with self._lock:
                 self.spans.append(rec)
+                self.overhead_s += (b1 - b0) + (time.perf_counter() - e0)
 
     def active_layer(self) -> str | None:
         """The layer of the innermost span open on this thread."""
@@ -73,19 +80,27 @@ class Recorder:
 
     # ------------------------------------------------------ attribution
     def layer_walls(self, t0: float, t1: float) -> tuple[dict, float]:
-        """Split [t0, t1] over the layers whose spans cover it.
+        """Split [t0, t1] over the layers at work.
 
-        An instant covered by k layers gives each 1/k of it, so the
-        layer walls plus the returned gap (time no span covers) add up
-        to ``t1 - t0`` exactly."""
-        cuts = sorted({t0, t1, *(min(max(s["start"], t0), t1)
-                                 for s in self.spans),
-                       *(min(max(s["end"], t0), t1) for s in self.spans)})
+        On each thread the innermost open span holds the instant, so a
+        nested span (an IceLite commit inside a landing) takes its time
+        from its parent.  An instant held on k threads by different
+        layers gives each 1/k of it.  So the layer walls plus the
+        returned gap (time no span covers) equal ``t1 - t0`` by
+        construction."""
+        spans = [s for s in self.spans if s["end"] > t0 and s["start"] < t1]
+        cuts = sorted({t0, t1, *(max(s["start"], t0) for s in spans),
+                       *(min(s["end"], t1) for s in spans)})
         walls: dict[str, float] = {}
         gap = 0.0
         for a, b in zip(cuts, cuts[1:]):
-            active = {s["layer"] for s in self.spans
-                      if s["start"] <= a and s["end"] >= b}
+            inner: dict[int, dict] = {}
+            for s in spans:
+                if s["start"] <= a and s["end"] >= b:
+                    held = inner.get(s["thread"])
+                    if held is None or s["depth"] > held["depth"]:
+                        inner[s["thread"]] = s
+            active = {s["layer"] for s in inner.values()}
             if not active:
                 gap += b - a
                 continue
